@@ -230,6 +230,7 @@ def main() -> None:
     # whichever query newly went first. The train/serve split is also the
     # split a deployment budgets: fit is paid per corpus refresh, serve per
     # query.
+    from kafkastreamingetl_spark import memo
     from kafkastreamingetl_spark.catalog import load_table
     from kafkastreamingetl_spark.operators import similarity as sim
 
@@ -247,7 +248,7 @@ def main() -> None:
         ),
     }
     fit: dict[str, float] = {}
-    sim._MODEL_CACHE.clear()  # all fitted models share the one memo now
+    memo.clear()  # every fit below pays its full cost
     for name, fn in fitters.items():
         try:
             t0 = time.perf_counter()
@@ -289,20 +290,19 @@ def main() -> None:
         read_io()  # baseline: consume warm-up + fit stages so query 1 starts clean
     timings: dict[str, float] = {}
     io: dict[str, dict] = {}
-    # Serving-only proof (VERDICT r13 item 3): similarity._FIT_LOG appends
-    # on every model-memo MISS. A timed lane that triggers a fit (an input
+    # Serving-only proof (VERDICT r13 item 3): memo.miss_counts counts
+    # every model-memo MISS. A timed lane that triggers a fit (an input
     # plan the fit lane didn't prewarm, or an LRU eviction) is SELF-HEALED:
     # the lane is re-timed immediately (model now hot) and the fit-polluted
     # first wall is recorded under fit["inline_fit_<name>"] instead — so
     # main-lane numbers are serving-only regardless of registry order.
-    from kafkastreamingetl_spark.operators import similarity as _sim
-
     timed_lane_fits: dict[str, list[str]] = {}
     for name, fn in qs.items():
         # clear persisted intermediates (e.g. dedup shingle features) so no
         # query benefits from a predecessor's cache and nothing accumulates
         spark.catalog.clearCache()
-        fit_mark = len(_sim._FIT_LOG)
+        memo.misses.clear()
+        fits_before = memo.miss_counts["model"]
         t0 = time.perf_counter()
         try:
             _bench_action(fn(spark, sf_dir))
@@ -310,9 +310,10 @@ def main() -> None:
             errors[name] = f"run: {type(e).__name__}: {e}"
             continue
         timings[name] = round(time.perf_counter() - t0, 4)
-        if len(_sim._FIT_LOG) > fit_mark:
-            kinds = [str(k[0]) for k in _sim._FIT_LOG[fit_mark:]]
-            timed_lane_fits[name] = kinds
+        if memo.miss_counts["model"] > fits_before:
+            # kinds from the bounded deque; "?" if it dropped them all
+            kinds = [str(k[1]) for ns, k in memo.misses if ns == "model"]
+            timed_lane_fits[name] = kinds or ["?"]
             fit[f"inline_fit_{name}"] = timings[name]
             if read_io:
                 read_io()  # drain the fit-polluted run's stages

@@ -6,6 +6,7 @@ as idiomatic Spark DataFrame / SQL / Structured Streaming programs:
 
 - ``session``    — tuned SparkSession builder (reference: spark/app.py:13-33)
 - ``catalog``    — parquet table loading + temp-view registration
+- ``memo``       — the session-scoped LRU behind every driver-side memo
 - ``operators``  — composable DataFrame -> DataFrame transforms covering the
   reference's operator inventory (SURVEY.md §2) plus large-scale
   training-data-pipeline extensions (dedup, similarity search, text analysis,

@@ -9,11 +9,11 @@ here are the entry point for the SQL door (reference spark/app.py:140-156).
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import memo
 from .session import ensure_runtime_confs
 
 TABLES = (
@@ -62,39 +62,34 @@ def _normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
     return df
 
 
-# Per-session memo of table HANDLES (lazy logical plans — never results or
-# cached blocks): building a parquet relation costs a py4j round-trip plus
-# file listing, footer schema read and the timestamp-normalization casts
-# (~0.14 s measured), and every registered query pays it 1-3 times per
-# invocation — ~30 s of the 179-lane bench headline was catalog chatter,
-# not computation. DataFrames are immutable, so handing every caller the
-# same plan object is semantically identical; each action still scans
-# parquet from disk. Keyed by applicationId so a new session never sees a
-# stale handle. The file LISTING is pinned at first construction — callers
-# reading a path whose contents mutate within one session (no registered
-# query or test does) must pass ``refresh=True``.
-_SCAN_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-_SCAN_CACHE_MAX = 64
-
-
+# Table HANDLES (lazy logical plans — never results or cached blocks) are
+# memoized per session (see memo.py): building a parquet relation costs a
+# py4j round-trip plus file listing, footer schema read and the
+# timestamp-normalization casts (~0.14 s measured), and every registered
+# query pays it 1-3 times per invocation — ~30 s of the 179-lane bench
+# headline was catalog chatter, not computation. DataFrames are immutable,
+# so handing every caller the same plan object is semantically identical;
+# each action still scans parquet from disk. The file LISTING is pinned at
+# first construction — callers reading a path whose contents mutate within
+# one session (no registered query or test does) must pass ``refresh=True``.
 def _cached_scan(
     spark: SparkSession, path: str, name: str | None, *, refresh: bool = False
 ) -> DataFrame:
     """Memoized parquet relation; ``name`` keys the per-table timestamp
     normalization (None = raw, no normalization)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(path), name)
-    if not refresh:
-        df = _SCAN_CACHE.get(key)
-        if df is not None:
-            _SCAN_CACHE.move_to_end(key)
-            return df
-    df = spark.read.parquet(path)
-    if name is not None:
-        df = _normalize_timestamps(df, name)
-    _SCAN_CACHE[key] = df
-    while len(_SCAN_CACHE) > _SCAN_CACHE_MAX:
-        _SCAN_CACHE.popitem(last=False)
-    return df
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(path)
+        return df if name is None else _normalize_timestamps(df, name)
+
+    return memo.get(
+        spark,
+        "scan",
+        (os.path.abspath(path), name),
+        build,
+        max=64,
+        refresh=refresh,
+    )
 
 
 def load_table(
@@ -107,7 +102,7 @@ def load_table(
     correctness of timestamps/window boundaries depends on them even when the
     session was built elsewhere (e.g. the driver's). This is a deliberate,
     documented session-wide side effect. The returned handle is memoized per
-    (session, path) — see :data:`_SCAN_CACHE`.
+    (session, path) in :mod:`.memo`.
     """
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -126,7 +121,7 @@ def load_events(
     that actually reaches the parquet reader.
 
     The underlying relation handle is memoized per (session, path) — the
-    file LISTING is pinned at first construction (see :data:`_SCAN_CACHE`).
+    file LISTING is pinned at first construction (see :mod:`.memo`).
     A caller that rewrites ``{sf_dir}/events.parquet`` mid-session must
     pass ``refresh=True`` or it will silently read the stale listing
     (ADVICE r15; no registered query or test writes a path it re-reads

@@ -9,14 +9,10 @@ per-row boundary identified in SURVEY.md §3.1.5.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-_PAR_PROBE_CACHE: "OrderedDict[tuple, int]" = OrderedDict()
-_PAR_PROBE_CACHE_MAX = 256
+from .. import memo
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -58,20 +54,13 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
             "spark.sql.shuffle.partitions",
         )
     )
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        n,
-        split_confs,
+    got = memo.get(
+        df.sparkSession,
+        "probe",
+        (df.semanticHash(), n, split_confs),
+        lambda: df.rdd.getNumPartitions(),
+        max=256,
     )
-    got = _PAR_PROBE_CACHE.get(key)
-    if got is None:
-        got = df.rdd.getNumPartitions()
-        _PAR_PROBE_CACHE[key] = got
-        while len(_PAR_PROBE_CACHE) > _PAR_PROBE_CACHE_MAX:
-            _PAR_PROBE_CACHE.popitem(last=False)
-    else:
-        _PAR_PROBE_CACHE.move_to_end(key)
     if got < n:
         return df.repartition(n)
     return df

@@ -73,10 +73,10 @@ branch and recompute agrees by construction.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .. import memo
 
 # Fallback width of the rank partitioning, used only when the session's
 # ``spark.sql.shuffle.partitions`` is unreadable (e.g. set to "auto" on a
@@ -96,36 +96,20 @@ _MID_OFFSET_MASK = (1 << _MID_OFFSET_BITS) - 1
 
 _HELPER_COLS = ("_mid", "_pid", "_rn", "_off", "_total", "_rank")
 
-# Persisted-base memo (appId, input plan semanticHash) -> DataFrame, the
-# shingle_features discipline: repeated constructions of the same cut
-# (bench warm + timed samples) reuse one persisted plan instead of
-# re-registering an identical cache entry each call. Results are never
-# memoized — clearCache drops the blocks and the next action re-scans.
-_NTILE_BASE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-_NTILE_BASE_CACHE_MAX = 8
-
 #: width used by the most recent cut (test/telemetry hook; the physical
 #: partition count of the output is AQE's business, not the contract)
 last_width: int | None = None
 
 
 def _persisted_base(df: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-    base = _NTILE_BASE_CACHE.get(key)
-    if base is None:
-        base = df
-        _NTILE_BASE_CACHE[key] = base
-        while len(_NTILE_BASE_CACHE) > _NTILE_BASE_CACHE_MAX:
-            _, evicted = _NTILE_BASE_CACHE.popitem(last=False)
-            evicted.unpersist()
-    else:
-        _NTILE_BASE_CACHE.move_to_end(key)
-    sl = base.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        base.persist(StorageLevel.MEMORY_AND_DISK)
-    return base
+    """``df`` persisted once per input plan (the shingle_features
+    discipline, see memo.py): repeated constructions of the same cut (bench
+    warm + timed samples) reuse one persisted plan instead of registering
+    an identical cache entry each call. Results are never memoized —
+    clearCache drops the blocks and the next action re-scans."""
+    return memo.persisted(
+        df.sparkSession, "ntile_base", df.semanticHash(), lambda: df, max=8
+    )
 
 
 def _key_and_ordering(
@@ -135,11 +119,11 @@ def _key_and_ordering(
     when the leading column was given by name — used to render the
     partition-id expression as ONE codegen-friendly parse — and the full
     sort-order list). String leading keys ride an ORDER-PRESERVING 7-byte
-    binary-prefix proxy (UTF-8 byte order equals code-point order, and a
-    prefix can only compare <=, never flip), so partition boundaries
-    still respect the true string order; ties within a proxy value share
-    a partition and are resolved by the in-partition sort on the real
-    column."""
+    binary-prefix proxy, zero-padded to a fixed 7 bytes (UTF-8 byte order
+    equals code-point order, and a padded prefix can only compare <=,
+    never flip), so partition boundaries still respect the true string
+    order; ties within a proxy value share a partition and are resolved by
+    the in-partition sort on the real column."""
     ordering = [
         F.col(c).asc_nulls_first() if isinstance(c, str) else c
         for c in order_cols
@@ -164,17 +148,25 @@ def _key_and_ordering(
         sql = f"unix_date(`{lead}`)" if named else None
         return F.unix_date(lead_col), sql, ordering
     if dtype == "string":
-        # big-endian value of the first 7 UTF-8 bytes: non-negative,
-        # fits a signed bigint, monotone in the string order
+        # big-endian value of the first 7 UTF-8 bytes, right-padded with
+        # zero bytes to exactly 7: non-negative, fits a signed bigint,
+        # monotone in the string order. Without the padding a shorter
+        # prefix reads as a smaller number ('az' = 0x617A > 'b' = 0x62).
         sql = (
-            "coalesce(cast(conv(hex(substring(encode(`"
-            f"{lead}`, 'UTF-8'), 1, 7)), 16, 10) as bigint), 0)"
+            "coalesce(cast(conv(rpad(hex(substring(encode(`"
+            f"{lead}`, 'UTF-8'), 1, 7)), 14, '0'), 16, 10) as bigint), 0)"
             if named
             else None
         )
         proxy = F.coalesce(
             F.conv(
-                F.hex(F.substring(F.encode(lead_col, "UTF-8"), 1, 7)), 16, 10
+                F.rpad(
+                    F.hex(F.substring(F.encode(lead_col, "UTF-8"), 1, 7)),
+                    14,
+                    "0",
+                ),
+                16,
+                10,
             ).cast("bigint"),
             F.lit(0),
         )

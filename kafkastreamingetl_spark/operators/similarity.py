@@ -33,6 +33,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions import array_lit, bind, cosine, dsum, ensure_parallelism
 
 # Deterministic ±1 hyperplanes (module-level so Spark literals and oracle SQL
@@ -546,41 +547,19 @@ def sql_embedding_neardup_pairs(
 # ---------------------------------------------------------------------------
 
 
-from collections import OrderedDict
-
-# Shared memo for every fitted model (label/IVF centroids, PQ codebooks,
-# k-means centroid sets): one key discipline — (applicationId, input plan
-# semanticHash,
-# model kind, hyperparameters) — same bounded-LRU eviction. Entries are
-# model-sized Python lists; nothing is persisted on the cluster, so
-# eviction is pure GC (bounded-memory proof: tests/test_similarity.py
-# churn test). The cap is sized WELL ABOVE the number of distinct fitted
-# models one bench/session touches (~a dozen keys: each fitter × each
-# input-plan semanticHash it is called with): VERDICT r13 observed
-# 1.7–3.0× wall spreads on kmeans_centroids that tracked registry ORDER —
-# the old cap of 8 let a long run evict a model mid-session and put a
-# silent refit inside a timed lane.
-_MODEL_CACHE: OrderedDict[tuple, list] = OrderedDict()
-_MODEL_CACHE_MAX = 64
-
-#: Append-only log of memo MISSES (the (kind, *hyperparams) key tail,
-#: minus the applicationId/semanticHash prefix): bench.py snapshots its
-#: length around the timed loop to PROVE no timed lane paid a fit — the
-#: machine-checked form of the "serving-only main lane" claim.
-_FIT_LOG: list[tuple] = []
-
-
-def _memo(key: tuple, build):
-    hit = _MODEL_CACHE.get(key)
-    if hit is not None:
-        _MODEL_CACHE.move_to_end(key)
-        return hit
-    _FIT_LOG.append(key[2:])
-    val = build()
-    _MODEL_CACHE[key] = val
-    while len(_MODEL_CACHE) > _MODEL_CACHE_MAX:
-        _MODEL_CACHE.popitem(last=False)
-    return val
+# Every fitted model (label/IVF centroids, PQ codebooks, k-means centroid
+# sets) shares the "model" memo namespace, keyed (input plan semanticHash,
+# model kind, hyperparameters). Entries are model-sized Python lists;
+# nothing is persisted on the cluster, so eviction is pure GC
+# (bounded-memory proof: tests/test_similarity.py churn test). The cap is
+# sized WELL ABOVE the number of distinct fitted models one bench/session
+# touches (~a dozen keys: each fitter × each input-plan semanticHash it is
+# called with): VERDICT r13 observed 1.7–3.0× wall spreads on
+# kmeans_centroids that tracked registry ORDER — the old cap of 8 let a
+# long run evict a model mid-session and put a silent refit inside a timed
+# lane. Every miss lands in ``memo.misses``: bench.py reads it around each
+# timed lane to PROVE no timed lane paid a fit.
+_MODEL_MEMO_MAX = 64
 
 
 def fit_label_centroids(
@@ -595,12 +574,11 @@ def fit_label_centroids(
     so the collected model is reproducible and the oracle can re-derive it.
     The collect is model-sized (n_labels × dim doubles), not data-sized —
     the same boundary as broadcasting fitted cluster centers in any IVF
-    build. Memoized per (session, input plan, columns) through the shared
-    ``_memo`` discipline: refitting an identical model for every query in
-    a session is wasted jobs.
+    build. Memoized per (session, input plan, columns) in the shared
+    "model" memo namespace: refitting an identical model for every query
+    in a session is wasted jobs.
     """
     key = (
-        embeddings.sparkSession.sparkContext.applicationId,
         embeddings.semanticHash(),
         "label_centroids",
         label_col,
@@ -627,7 +605,9 @@ def fit_label_centroids(
             for lbl, dims in by_label.items()
         )
 
-    return _memo(key, build)
+    return memo.get(
+        embeddings.sparkSession, "model", key, build, max=_MODEL_MEMO_MAX
+    )
 
 
 def ann_ivf_topk(
@@ -998,29 +978,13 @@ def _explode_sub(df: DataFrame, idc: str, vc: str, out_id: str) -> DataFrame:
     )
 
 
-# Per-session memo of model FRAMES: createDataFrame of a collected model
-# costs a few hundred ms of Python->JVM conversion per call, and the
-# models themselves are already memoized (_MODEL_CACHE) — rebuilding the
-# same 8-128-row LocalRelation every query construction is pure driver
-# chatter. DataFrames are immutable lazy plans; keyed by applicationId +
-# frozen model content, same discipline as catalog._SCAN_CACHE.
-_MODEL_DF_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-_MODEL_DF_CACHE_MAX = 64
-
-
-def _model_df_memo(spark, kind: str, frozen: tuple, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, kind, frozen)
-    hit = _MODEL_DF_CACHE.get(key)
-    if hit is not None:
-        _MODEL_DF_CACHE.move_to_end(key)
-        return hit
-    df = build()
-    _MODEL_DF_CACHE[key] = df
-    while len(_MODEL_DF_CACHE) > _MODEL_DF_CACHE_MAX:
-        _MODEL_DF_CACHE.popitem(last=False)
-    return df
-
-
+# Model FRAMES are memoized per session too (the "model_df" namespace):
+# createDataFrame of a collected model costs a few hundred ms of
+# Python->JVM conversion per call, and the models themselves are already
+# memoized — rebuilding the same 8-128-row LocalRelation every query
+# construction is pure driver chatter. DataFrames are immutable lazy plans,
+# keyed by frozen model content: the same reason catalog can share scan
+# handles.
 def _cbl_df(spark, cb: list[tuple[int, int, list[float]]]) -> DataFrame:
     """The collected codebook as a broadcast-able (s, code, cvl) frame.
 
@@ -1032,14 +996,15 @@ def _cbl_df(spark, cb: list[tuple[int, int, list[float]]]) -> DataFrame:
     frozen = tuple(
         (int(s), int(code), tuple(float(v) for v in cvl)) for s, code, cvl in cb
     )
-    return _model_df_memo(
+    return memo.get(
         spark,
-        "cbl",
-        frozen,
+        "model_df",
+        ("cbl", frozen),
         lambda: spark.createDataFrame(
             [(s, code, list(cvl)) for s, code, cvl in frozen],
             schema="s int, code int, cvl array<double>",
         ),
+        max=64,
     )
 
 
@@ -1136,7 +1101,6 @@ def fit_pq_codebook_label(
     twin's GROUP BY. The collect is model-sized (≤ 1,024 rows); memoized
     per (session, input plan) so a session fits once and serves many."""
     key = (
-        embeddings.sparkSession.sparkContext.applicationId,
         embeddings.semanticHash(),
         "pq_label", id_col, vec_col, label_col,
     )
@@ -1158,7 +1122,9 @@ def fit_pq_codebook_label(
             (s, code, [js[j] for j in sorted(js)]) for (s, code), js in m.items()
         )
 
-    return _memo(key, build)
+    return memo.get(
+        embeddings.sparkSession, "model", key, build, max=_MODEL_MEMO_MAX
+    )
 
 
 def fit_pq_codebook_kmeans(
@@ -1184,7 +1150,6 @@ def fit_pq_codebook_kmeans(
     (≤ 1,024 rows/iteration) — the same collect boundary as Spark MLlib's
     own KMeans. Memoized per (session, input plan, n_iter)."""
     key = (
-        embeddings.sparkSession.sparkContext.applicationId,
         embeddings.semanticHash(),
         "pq_kmeans", n_iter, id_col, vec_col,
     )
@@ -1230,7 +1195,9 @@ def fit_pq_codebook_kmeans(
             ]
         return cb
 
-    return _memo(key, build)
+    return memo.get(
+        embeddings.sparkSession, "model", key, build, max=_MODEL_MEMO_MAX
+    )
 
 
 def pq_topk(
@@ -1545,14 +1512,15 @@ def _km_df(spark, model: list[tuple[int, list[float]]]) -> DataFrame:
     frozen = tuple(
         (int(cl), tuple(float(v) for v in cvl)) for cl, cvl in model
     )
-    return _model_df_memo(
+    return memo.get(
         spark,
-        "km",
-        frozen,
+        "model_df",
+        ("km", frozen),
         lambda: spark.createDataFrame(
             [(cl, list(cvl)) for cl, cvl in frozen],
             schema="cl int, cvl array<double>",
         ),
+        max=64,
     )
 
 
@@ -1614,7 +1582,6 @@ def fit_kmeans(
     the MLlib KMeans collect boundary. Memoized per (session, input plan,
     k, n_iter)."""
     key = (
-        embeddings.sparkSession.sparkContext.applicationId,
         embeddings.semanticHash(),
         "kmeans", k, n_iter, id_col, vec_col,
     )
@@ -1649,7 +1616,9 @@ def fit_kmeans(
             ]
         return model
 
-    return _memo(key, build)
+    return memo.get(
+        embeddings.sparkSession, "model", key, build, max=_MODEL_MEMO_MAX
+    )
 
 
 def kmeans_centroid_stats(
@@ -2023,14 +1992,6 @@ def sql_cluster_balanced_sample(
 # ---------------------------------------------------------------------------
 
 
-# Resolved semantic-cluster labels, memoized per (session, input plan,
-# threshold) — same discipline as dedup._CLUSTERS_CACHE: the closure is an
-# eager checkpointed computation, so clusters + scrub + any downstream
-# consumer over one corpus resolve components once, not once per query.
-_EMB_CLUSTERS_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-_EMB_CLUSTERS_CACHE_MAX = 8
-
-
 def embedding_clusters(
     embeddings: DataFrame,
     *,
@@ -2048,16 +2009,7 @@ def embedding_clusters(
     ``n_planes`` is the scale dial — see :func:`embedding_neardup_pairs`."""
     from .dedup import connected_components
 
-    key = (
-        embeddings.sparkSession.sparkContext.applicationId,
-        embeddings.semanticHash(),
-        id_col,
-        vec_col,
-        round(min_cos, 9),
-        n_planes,
-    )
-    labels = _EMB_CLUSTERS_CACHE.get(key)
-    if labels is None:
+    def build() -> DataFrame:
         pairs = embedding_neardup_pairs(
             embeddings,
             min_cos=min_cos,
@@ -2065,15 +2017,21 @@ def embedding_clusters(
             vec_col=vec_col,
             n_planes=n_planes,
         )
-        labels = connected_components(
+        return connected_components(
             pairs, src_col="vec_a", dst_col="vec_b"
         ).select(F.col("node").alias(id_col), "cluster_id")
-        _EMB_CLUSTERS_CACHE[key] = labels
-        while len(_EMB_CLUSTERS_CACHE) > _EMB_CLUSTERS_CACHE_MAX:
-            _EMB_CLUSTERS_CACHE.popitem(last=False)  # checkpoint RDD → GC
-    else:
-        _EMB_CLUSTERS_CACHE.move_to_end(key)
-    return labels
+
+    # The closure is an eager checkpointed computation, so clusters, scrub
+    # and any downstream consumer over one corpus resolve components once,
+    # not once per query. Evicted labels need no on_evict: their
+    # checkpoint RDD is freed by GC.
+    return memo.get(
+        embeddings.sparkSession,
+        "emb_clusters",
+        (embeddings.semanticHash(), id_col, vec_col, round(min_cos, 9), n_planes),
+        build,
+        max=8,
+    )
 
 
 def dedup_embeddings_semantic(
@@ -2356,6 +2314,8 @@ def embedding_covariance(
                             .quantize(q4, ROUND_HALF_UP)
                             .scaleb(4)
                         )
+        if n == 0:
+            return  # no partial for an empty task: empty input -> 0 rows
         rows = [
             (
                 i + 1,

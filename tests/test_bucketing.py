@@ -13,6 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from kafkastreamingetl_spark import memo
 from kafkastreamingetl_spark.operators import bucketing
 from kafkastreamingetl_spark.plans import plan_shape_and_text
 
@@ -107,7 +108,7 @@ def test_ensure_order_tables_memoized_per_session(spark, sf_dir, tmp_path):
     }
     for t in names:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    bucketing._BUCKETED_TABLES.clear()
+    memo.clear()
 
 
 def test_rollup_matches_unbucketed_twin(spark, sf_dir, tmp_path):
@@ -140,4 +141,4 @@ def test_rollup_matches_unbucketed_twin(spark, sf_dir, tmp_path):
     assert _exchanges(join_only) == 0
     for t in names:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    bucketing._BUCKETED_TABLES.clear()
+    memo.clear()

@@ -37,14 +37,9 @@ def _reset_engine_state(spark) -> None:
     InMemoryRelation replaces plan subtrees) or resolved-label memos
     (checkpoint scans replace the closure pipeline) into the plans under
     measurement."""
-    from kafkastreamingetl_spark.operators import dedup, similarity
+    from kafkastreamingetl_spark import memo
 
-    while dedup._FEATS_CACHE:
-        _, df = dedup._FEATS_CACHE.popitem()
-        df.unpersist()
-    dedup._CLUSTERS_CACHE.clear()
-    similarity._EMB_CLUSTERS_CACHE.clear()
-    similarity._MODEL_CACHE.clear()
+    memo.clear()
     spark.catalog.clearCache()
 
 

@@ -9,12 +9,8 @@ import struct
 
 from pyspark.sql import functions as F
 
-from kafkastreamingetl_spark import catalog
-from kafkastreamingetl_spark.functions import (
-    _PAR_PROBE_CACHE,
-    array_lit,
-    ensure_parallelism,
-)
+from kafkastreamingetl_spark import catalog, memo
+from kafkastreamingetl_spark.functions import array_lit, ensure_parallelism
 
 SF = "/root/testdata/sf0.001"
 
@@ -105,9 +101,9 @@ def test_ensure_parallelism_memoized_probe_still_repartitions(spark):
     out1 = ensure_parallelism(df)
     assert out1.rdd.getNumPartitions() > 1
     # second call on the same logical plan hits the memo (same decision)
-    key_hits = len(_PAR_PROBE_CACHE)
+    memo.misses.clear()
     out2 = ensure_parallelism(df)
-    assert len(_PAR_PROBE_CACHE) == key_hits  # no new probe entry
+    assert not [k for ns, k in memo.misses if ns == "probe"]  # no new probe
     assert out2.rdd.getNumPartitions() == out1.rdd.getNumPartitions()
     # an already-wide frame passes through untouched
     wide = spark.range(0, 1000, 1, 64)

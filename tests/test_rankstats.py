@@ -219,3 +219,35 @@ def test_rfm_segments_match_window_ntile_differential(spark, sf_dir):
     )
     assert expected.exceptAll(got).count() == 0
     assert got.exceptAll(expected).count() == 0
+
+
+def test_exact_ntile_cuts_string_leading_key_matches_window_ntile(spark):
+    """A string leading key rides a 7-byte binary proxy in the bounds and
+    partition ids; the proxy must be zero-padded to a fixed width, or a
+    shorter prefix reads as a smaller number ('az' = 0x617A sorts above
+    'b' = 0x62) and rows land in the wrong range partition. Mixed lengths,
+    multibyte UTF-8, keys longer than the 7-byte prefix, empty strings and
+    NULLs, each at several cut widths, all bit-equal to F.ntile."""
+    from kafkastreamingetl_spark.operators.rankstats import exact_ntile_cuts
+
+    vocab = [
+        "b", "az", "a", "abc", "ba", "z", "zz", "é", "éa", "aé", "日", "日本語",
+        "ü", "abcdefghij", "abcdefgh", "", None,
+    ]
+    rows = [
+        (None if vocab[i % len(vocab)] is None
+         else vocab[i % len(vocab)] + "q" * (i % 3), i)
+        for i in range(400)
+    ]
+    df = spark.createDataFrame(rows, "k string, uid long")
+    for width in (4, 16):
+        got = exact_ntile_cuts(
+            df, [(10, ["k", "uid"], "b1"), (7, [F.col("k"), "uid"], "b2")],
+            num_partitions=width,
+        )
+        expected = df
+        for n, name in ((10, "b1"), (7, "b2")):
+            w = Window.orderBy(F.col("k").asc_nulls_first(), "uid")
+            expected = expected.withColumn(name, F.ntile(n).over(w).cast("int"))
+        assert expected.exceptAll(got).count() == 0, width
+        assert got.exceptAll(expected).count() == 0, width

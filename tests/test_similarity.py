@@ -155,30 +155,48 @@ def test_model_memo_bounded_under_churn(spark, emb, monkeypatch):
     production cap is sized above a full bench session's key count
     (VERDICT r13 item 3: eviction mid-session put a refit inside a timed
     lane)."""
+    from kafkastreamingetl_spark import memo
     from kafkastreamingetl_spark.operators import similarity as sim
 
-    monkeypatch.setattr(sim, "_MODEL_CACHE_MAX", 6)
-    for i in range(6 + 3):
-        df = emb.filter(emb.vec_id < 16 + i).select("vec_id", "embedding")
+    def model_misses(df):
+        memo.misses.clear()
         model = sim.fit_kmeans(df, k=2, n_iter=1)
         assert len(model) == 2
-    assert len(sim._MODEL_CACHE) <= 6
+        return [k for ns, k in memo.misses if ns == "model"]
+
+    monkeypatch.setattr(sim, "_MODEL_MEMO_MAX", 6)
+    memo.clear()
+    dfs = [
+        emb.filter(emb.vec_id < 16 + i).select("vec_id", "embedding")
+        for i in range(6 + 3)
+    ]
+    for df in dfs:
+        assert len(model_misses(df)) == 1
+    # exactly the 6 most recent models are held: each of them hits (a cap
+    # below 6 would refit dfs[3]), and hits evict nothing ...
+    for df in dfs[3:]:
+        assert not model_misses(df)
+    # ... while the 7th most recent was evicted (a cap of 7 would hit here)
+    assert len(model_misses(dfs[2])) == 1
 
 
 def test_model_memo_logs_misses_not_hits(spark, emb):
-    """bench.py's serving-only assertion reads _FIT_LOG: a miss appends
-    the (kind, *params) key tail; a hit appends nothing — so a zero-delta
-    log across the timed loop PROVES no lane paid a fit."""
+    """bench.py's serving-only assertion reads memo.misses: a model miss
+    logs its (semanticHash, kind, *params) key; a hit logs nothing — so no
+    "model" miss across a timed lane PROVES the lane paid no fit."""
+    from kafkastreamingetl_spark import memo
     from kafkastreamingetl_spark.operators import similarity as sim
 
     df = emb.filter(emb.vec_id < 40).select("vec_id", "embedding")
-    sim._MODEL_CACHE.clear()
-    n0 = len(sim._FIT_LOG)
+    memo.clear()
+    memo.misses.clear()
     sim.fit_kmeans(df, k=2, n_iter=1)
-    assert len(sim._FIT_LOG) == n0 + 1
-    assert sim._FIT_LOG[-1][0] == "kmeans"
+    fits = [k for ns, k in memo.misses if ns == "model"]
+    assert len(fits) == 1
+    assert fits[0][1] == "kmeans"
+    memo.misses.clear()
     sim.fit_kmeans(df, k=2, n_iter=1)  # memo hit: no new log entry
-    assert len(sim._FIT_LOG) == n0 + 1
+    assert not [k for ns, k in memo.misses if ns == "model"]
 
 
 def test_pq_index_serving_matches_inline_and_never_reads_vectors(
@@ -270,6 +288,11 @@ def test_embedding_covariance_mapinpandas_bit_equals_relational(spark):
     assert got.dtypes == twin.dtypes
     assert got.exceptAll(twin).count() == 0
     assert twin.exceptAll(got).count() == 0
+    # empty input: no partials, so 0 rows like the twin (and the oracle
+    # SQL's GROUP BY), never n_dims² rows of NULL cov
+    empty = emb.filter("vec_id < 0")
+    assert _embedding_covariance_relational(empty).count() == 0
+    assert embedding_covariance(empty).count() == 0
 
 
 def test_neardup_blocking_width_dial(spark):

@@ -240,10 +240,11 @@ def _time_queries(spark, qs, sf_dir: str, n_planes: int) -> tuple[dict, dict]:
     width is the fix, so the committed numbers measure the tuned
     configuration; everything else runs the registered queries verbatim.
     """
+    from kafkastreamingetl_spark import memo
     from kafkastreamingetl_spark.operators import similarity as sim
 
     fit: dict[str, float] = {}
-    sim._MODEL_CACHE.clear()
+    memo.clear()
     emb = load_table(spark, sf_dir, "embeddings")
 
     def _clusters(sp, d):

@@ -115,6 +115,7 @@ def measure(spark, sf_dir: str) -> dict:
     every pinned lane + sketch pair member, serving-only (fit/prewarm paid
     first, exactly bench.py's split)."""
     from bench import _bench_action, _stage_io_reader
+    from kafkastreamingetl_spark import memo
     from kafkastreamingetl_spark.catalog import load_table
     from kafkastreamingetl_spark.operators import similarity as sim
     from kafkastreamingetl_spark.queries import APPROX_VARIANTS
@@ -124,7 +125,7 @@ def measure(spark, sf_dir: str) -> dict:
 
     qs = queries()
     emb = load_table(spark, sf_dir, "embeddings")
-    sim._MODEL_CACHE.clear()
+    memo.clear()
     sim.fit_label_centroids(emb)
     sim.fit_kmeans(emb.select("vec_id", "embedding"))
     # bucketed-layout build is refresh-cost, not serve-cost (bench.py's
